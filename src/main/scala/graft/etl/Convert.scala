@@ -11,8 +11,11 @@ import org.apache.spark.sql.functions._
   *
   * The reference's strategy selection (C1), pipelining, batching and memory
   * management dissolve into Catalyst/Tungsten; what remains is the declared
-  * dataflow. Row order is preserved end-to-end via per-file row positions
-  * (no global shuffle — see IngestOps.withFileRowPos).
+  * dataflow. Row order is preserved end-to-end: the xlsx path holds it by
+  * construction (one scan partition per file in name order, streamed
+  * sequentially, parts written in partition order — no sort, no shuffle);
+  * the parquet path sorts on per-file row positions
+  * (IngestOps.withFileRowPos), because its splits are packed by size.
   */
 object Convert {
 
@@ -55,7 +58,13 @@ object Convert {
     * header naming with index fallback (S4), shared-strings resolve (S5),
     * all-string cells (T5), blank normalization + empty-row drop (T2), and
     * the zip-bomb guards (S7/S8/C3) all run inside the source; what remains
-    * here is the positional skip (T3), order capture, and the sink. */
+    * here is the positional skip (T3) and the sink.
+    *
+    * Row order (HighVolumeExcelConverter-Contract-v2.0.1.md:99) holds by
+    * construction, with no sort: `XlsxScan.planInputPartitions` returns
+    * partition i = file i in `XlsxParsing.listFiles` order, each partition
+    * streams its sheet in source order, and every sink emits its parts in
+    * partition order. So each scan task renders and writes its own rows. */
   private def runXlsx(spark: SparkSession, config: EngineConfig): Result = {
     val first = graft.sources.XlsxParsing.listFiles(config.inputDir).head
     val zip = new java.util.zip.ZipFile(first)
@@ -68,24 +77,19 @@ object Convert {
       .option("maxEntrySizeBytes", config.maxEntrySizeBytes.toString)
       .option("minInflateRatio", config.minInflateRatio.toString)
       .load(config.inputDir)
-    // order capture: partitions are whole files in name order and the
-    // in-file stream is sequential, so the partition-prefixed monotonic id
-    // reproduces source order (the contract's row-order invariant)
-    val positioned = IngestOps.withRowId(df, "_pos")
     // T3: the source consumed the header; headerRow skips that many leading
     // DATA rows per FILE (each workbook carries its own preamble). The
     // in-file index unpacks narrowly from the monotonic id
     // (partitionId·2^33 + index — one partition per file), so the skip is a
     // plain filter: no window, no shuffle.
-    val afterHeader =
+    val rows =
       if (config.headerRow > 0)
-        positioned.filter(
-          col("_pos").bitwiseAND(lit((1L << 33) - 1)) >= config.headerRow)
-      else positioned
-    val ordered = afterHeader.orderBy("_pos").drop("_pos") // already all-string
+        IngestOps.withRowId(df, "_pos")
+          .filter(col("_pos").bitwiseAND(lit((1L << 33) - 1)) >= config.headerRow)
+          .drop("_pos")
+      else df // already all-string
     val out = config.outputPath.getOrElse(s"${config.inputDir}-${sheet}-chunks")
-    val rows = writeSink(ordered, out, config)
-    Result(sheet, config.format.toLowerCase, out, rows)
+    Result(sheet, config.format.toLowerCase, out, writeSink(rows, out, config))
   }
 
   private def writeSink(df: DataFrame, out: String, config: EngineConfig): Long =

@@ -1,7 +1,10 @@
 package graft.etl
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
@@ -13,9 +16,10 @@ import org.apache.spark.sql.functions._
   * Scale note (100 TB): ndjson/csv sinks are fully distributed (one file per
   * task, `maxRecordsPerFile` for chunk parity). The JSON-array sink (K3) is
   * inherently a single sequential `[...]` file — same single-writer design as
-  * the reference (core/writers/JsonDataWriter.java); it streams with bounded
-  * memory via `toLocalIterator`, and is NOT meant for 100 TB outputs (the
-  * reference contract scopes it the same way: NDJSON is "recommended").
+  * the reference (core/writers/JsonDataWriter.java); it renders in parallel
+  * to scratch and the driver concatenates the parts into one document, so it
+  * is NOT meant for 100 TB outputs (the reference contract scopes it the same
+  * way: NDJSON is "recommended").
   */
 object Sinks {
 
@@ -23,6 +27,26 @@ object Sinks {
     * existing output without overwrite → error; with overwrite → truncate. */
   def saveMode(overwrite: Boolean): SaveMode =
     if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists
+
+  // part-<split>-<job uuid>-c<counter>.<ext>, as Spark's file writer names them
+  private val PartName = """part-(\d+)-.+-c(\d+)(?:\..*)?""".r
+
+  /** Numeric (split, counter) of a Spark part file name. The zero-padded
+    * fields outgrow their padding (`part-100000` vs `part-20000`, `c1000`
+    * vs `c999`), so the name text does not sort in partition order. */
+  private[etl] def partOrder(name: String): (Long, Long) = name match {
+    case PartName(split, counter) => (split.toLong, counter.toLong)
+    case _ => throw new IllegalArgumentException(s"not a Spark part file name: $name")
+  }
+
+  /** The part files of a finished write under `dir`, in partition order. */
+  private[etl] def partFiles(dir: Path): Seq[Path] = {
+    val ls = Files.list(dir)
+    val parts =
+      try ls.iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).toVector
+      finally ls.close()
+    parts.sortBy(p => partOrder(p.getFileName.toString))
+  }
 
   /** K1 — NDJSON sink: Spark's JSON sink *is* NDJSON (one object per line).
     * `singleFile=true` reproduces the reference's one-output-file reality.
@@ -37,11 +61,8 @@ object Sinks {
       singleFile: Boolean = false): Unit = {
     df.write.mode(saveMode(overwrite)).json(path)
     if (singleFile) {
-      import scala.jdk.CollectionConverters._
       val dir = Paths.get(path)
-      val parts = Files.list(dir).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-")).toSeq
-        .sortBy(_.getFileName.toString)
+      val parts = partFiles(dir)
       if (parts.size > 1) {
         val merged = dir.resolve(".merge.tmp")
         val out = Files.newOutputStream(merged, StandardOpenOption.CREATE,
@@ -155,19 +176,12 @@ object Sinks {
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     val (open, sep, close) = if (pretty) ("[\n  ", ",\n  ", "\n]") else ("[", ",", "]")
     var n = 0L
-    import scala.jdk.CollectionConverters._
-    val t0 = System.nanoTime()
     try {
       // rendered rows never contain a raw newline (JSON escapes them), so
       // the text sink's one-line-per-row framing round-trips exactly
       df.toJSON.write.text(stage.toString)
-      if (sys.env.contains("SPARK_GRAFT_SINK_LOG")) println(
-        f"[jsonArray] render ${(System.nanoTime() - t0) / 1e9}%.2f s")
       out.write(open)
-      val parts = Files.list(stage).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-")).toSeq
-        .sortBy(_.getFileName.toString)
-      parts.foreach { part =>
+      partFiles(stage).foreach { part =>
         val rd = Files.newBufferedReader(part, StandardCharsets.UTF_8)
         try {
           var line = rd.readLine()
@@ -180,14 +194,14 @@ object Sinks {
         } finally rd.close()
       }
       out.write(close)
-      if (sys.env.contains("SPARK_GRAFT_SINK_LOG")) println(
-        f"[jsonArray] total ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
     } finally {
       out.close()
       try {
-        Files.walk(stage).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
-      } catch { case _: Throwable => () }
+        val walk = Files.walk(stage)
+        try walk.iterator().asScala.toVector.sortBy(-_.getNameCount)
+          .foreach(Files.deleteIfExists(_))
+        finally walk.close()
+      } catch { case NonFatal(_) => () }
     }
     n
   }

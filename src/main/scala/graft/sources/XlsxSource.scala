@@ -427,6 +427,11 @@ private[sources] class XlsxScan(path: String, tableSchema: StructType,
     required: StructType, opts: XlsxOptions) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  /** Partition i is file i in [[XlsxParsing.listFiles]] order (or, with
+    * `unionSheets`, that file's sheets in workbook order), and each reader
+    * streams its sheet sequentially. So partition order followed by in-task
+    * order IS source order: `graft.etl.Convert.runXlsx` relies on this to
+    * write rows in order with no sort. Keep it when changing the split. */
   override def planInputPartitions(): Array[InputPartition] = {
     val files = XlsxParsing.listFiles(path)
     if (!opts.unionSheets)

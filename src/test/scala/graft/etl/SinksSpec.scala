@@ -92,4 +92,23 @@ class SinksSpec extends AnyFunSuite {
     assert(Sinks.saveMode(false) == org.apache.spark.sql.SaveMode.ErrorIfExists)
     assert(Sinks.saveMode(true) == org.apache.spark.sql.SaveMode.Overwrite)
   }
+
+  test("part files order by numeric (split, counter), not by name text") {
+    val job = "0c12-c345-4b6d"
+    val inOrder = Seq(
+      s"part-00000-$job-c000.snappy.parquet",
+      s"part-00001-$job-c999.csv",
+      s"part-00001-$job-c1000.csv",
+      s"part-20000-$job-c000.json",
+      s"part-100000-$job-c000.json")
+    assert(inOrder.sorted != inOrder) // what a text sort gets wrong
+    assert(scala.util.Random.shuffle(inOrder).sortBy(Sinks.partOrder) == inOrder)
+    assert(Sinks.partOrder(s"part-00007-$job-c012.txt") == ((7L, 12L)))
+    intercept[IllegalArgumentException](Sinks.partOrder("part-00000"))
+
+    val dir = Paths.get(tmpDir())
+    (inOrder ++ Seq("_SUCCESS", s".part-00000-$job-c000.json.crc"))
+      .foreach(n => Files.createFile(dir.resolve(n)))
+    assert(Sinks.partFiles(dir).map(_.getFileName.toString) == inOrder)
+  }
 }
